@@ -49,7 +49,7 @@ def run_tree_verify(
     """Run the whole E1 lifecycle; returns per-status counts + timing.
 
     Sinks under ``out_dir``: report/ (partitioned by status), manifest/
-    (the post-run manifest state, partitioned by cell bucket), lineage/
+    (the post-run manifest state, unpartitioned parquet), lineage/
     (appended per run).
     """
     import time

@@ -34,6 +34,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from fileverification_spark.functions import text as TX
+from fileverification_spark.session import local_relation
 
 
 def pack_offsets(
@@ -73,7 +74,7 @@ def pack_offsets(
         base.append((r["pid"], acc))
         acc += r["tot"]
     bases = F.broadcast(
-        spark.createDataFrame(base, "pid int, base bigint")
+        local_relation(spark, base, "pid int, base bigint")
     )
 
     w = (

@@ -32,6 +32,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql import Window as W
 
+from fileverification_spark.session import local_relation
+
 COS_ROUND = 6
 
 
@@ -129,13 +131,13 @@ def neardup_pairs_blocked(emb: DataFrame, tau: float, n_blocks: int = 8) -> Data
 
     # replicate: row in block i joins every unordered pair {lo, hi} with
     # i in {lo, hi}; 'other' marks which side of the pair the row fills
-    pair_map = [
+    pair_map = {
         (i, min(i, j), max(i, j))
         for i in range(n_blocks)
         for j in range(n_blocks)
-    ]
+    }
     pairs_df = F.broadcast(
-        spark.createDataFrame(pair_map, "blk int, blk_lo int, blk_hi int").distinct()
+        local_relation(spark, sorted(pair_map), "blk int, blk_lo int, blk_hi int")
     )
     replicated = rows.join(pairs_df, "blk")
 
@@ -408,14 +410,15 @@ def ann_ivf_topk(
         for lid in np.argsort(d2, kind="stable")[:nprobe]:
             probe_rows.append((r["vec_id"], int(lid)))
     spark = emb.sparkSession
-    probes = spark.createDataFrame(probe_rows, ["query_id", "p_list"])
+    probes = local_relation(spark, probe_rows, "query_id bigint, p_list bigint")
     listed = with_ivf_lists(emb, centroids)
     cand = listed.join(
         F.broadcast(probes),
         (F.col("list_id") == F.col("p_list"))
         & (F.col("vec_id") != F.col("query_id")),
     )
-    qv_df = spark.createDataFrame(
+    qv_df = local_relation(
+        spark,
         [(r["vec_id"], [float(x) for x in r["embedding"]]) for r in qrows],
         "query_id bigint, qv array<double>",
     )

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from fileverification_spark import grid
 from fileverification_spark.functions import text as TX
+from fileverification_spark.session import local_relation
 
 #: hash space: 15 hex digits = 60 bits (fits int64, exact as double)
 SPACE = float(1 << 60)
@@ -209,9 +210,8 @@ def cms_point_estimates(
     so the one-sided error (est >= true) is visible. Probe relation is
     tiny and broadcast onto the d*w sketch."""
     sk = cms_tokens(docs, depth, width)
-    spark = docs.sparkSession
-    probe = spark.createDataFrame(
-        [(t,) for t in sorted(set(probes))], "tok string"
+    probe = local_relation(
+        docs.sparkSession, [(t,) for t in sorted(set(probes))], "tok string"
     ).select(
         "tok", F.explode(F.sequence(F.lit(0), F.lit(depth - 1))).alias("row")
     )

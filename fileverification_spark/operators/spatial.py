@@ -11,12 +11,17 @@ row). Design:
   this is the partition-pruning step; at 100 TB only the covering cells'
   partitions are read), then an exact ray-casting test runs on the
   surviving candidates. Two exact-test implementations with identical
-  arithmetic:
-    * `pip_join` — vectorized pandas UDF (numpy, Arrow batches): the
-      canonical scale path (SURVEY §2.8);
-    * `pip_join_sql` — pure JVM: explode polygon edges, crossing-parity
-      groupBy. Used as the DuckDB-oracle-equivalent path and as a
-      cross-check of the UDF in tests.
+  arithmetic, both in the JVM:
+    * `pip_join` — the `pip_inside` Column: each covering row carries its
+      polygon's edges, and an `aggregate` over them counts the crossings
+      per candidate row. Stateless, so streams use it too (geofence). The
+      canonical path;
+    * `pip_join_sql` — join the polygon edges, crossing-parity groupBy:
+      the shape of the DuckDB oracle, kept as a cross-check in tests.
+
+- **Driver-built inputs** (coverings, ring disks, query points, labels)
+  enter plans through `session.local_relation`, a JVM `LocalTableScan`,
+  so no spatial query runs a Python worker.
 
 - **kNN**: `knn_bruteforce` broadcasts the (tiny) query-point set, scores
   every page (one scan, no shuffle until the top-k window) — the exact
@@ -44,13 +49,12 @@ from __future__ import annotations
 import math
 from dataclasses import dataclass
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 from pyspark.sql import Window as W
 
 from fileverification_spark import grid
+from fileverification_spark.session import local_relation
 
 # ---------------------------------------------------------------------------
 # Deterministic synthetic polygon + query-point sets (no external data).
@@ -197,6 +201,10 @@ SELECT poly_id,
 FROM folded"""
 
 
+#: schema of a (query_id, lat, lon) query-point list as a relation
+_QUERIES_DDL = "query_id bigint, qlat double, qlon double"
+
+
 def default_query_points(n: int = 10) -> list[tuple[int, float, float]]:
     """(query_id, lat, lon) — deterministic spread."""
     return [(i, -60.0 + 13.0 * i, ((-150.0 + 37.0 * i + 180.0) % 360.0) - 180.0) for i in range(n)]
@@ -234,82 +242,71 @@ def prune_to_cells(
     return pages.where(F.col("part_cell").isin(parents))
 
 
+def _edge_rows(polys: list[Polygon]) -> list[tuple[str, float, float, float, float]]:
+    """(poly_id, y1, x1, y2, x2) per non-horizontal edge — the input of
+    the engine's crossing-parity tests (``pip_inside``, ``pip_join_sql``)."""
+    rows = []
+    for p in polys:
+        v = p.vertices
+        for j in range(len(v)):
+            y1, x1 = v[j]
+            y2, x2 = v[(j + 1) % len(v)]
+            if y1 != y2:  # horizontal edge never crosses
+                rows.append((p.poly_id, y1, x1, y2, x2))
+    return rows
+
+
+#: one polygon's non-horizontal edges, as carried on its covering rows
+_EDGES_DDL = "array<struct<y1: double, x1: double, y2: double, x2: double>>"
+
+
+def _covering_relation(
+    spark: SparkSession, polys: list[Polygon], covering: list[tuple[str, int]]
+) -> DataFrame:
+    """(poly_id, cov_cell, poly_edges): ``covering`` as a JVM local
+    relation, each row carrying its polygon's edges for ``pip_inside``."""
+    edges: dict[str, list[tuple[float, float, float, float]]] = {}
+    for pid, *edge in _edge_rows(polys):
+        edges.setdefault(pid, []).append(tuple(edge))
+    return local_relation(
+        spark,
+        [(pid, c, edges.get(pid, [])) for pid, c in covering],
+        f"poly_id string, cov_cell bigint, poly_edges {_EDGES_DDL}",
+    )
+
+
 def pip_candidates(
     pages: DataFrame, polys: list[Polygon], res: int, part_res: int = 2
 ) -> DataFrame:
-    """Public covering prefilter: broadcast (poly_id, cell) covering equi-
-    joined on the input's `cell` column (works for any relation carrying
-    one — pages, geocoded events). The exact test runs on the output."""
-    return _candidates(pages, polys, res, part_res)
-
-
-def pip_inside_udf(polys: list[Polygon]):
-    """Public handle on the vectorized exact point-in-polygon test (the
-    stateless ray-cast pandas UDF) for composition outside this module —
-    e.g. streaming geofence filters."""
-    return _pip_pandas_udf(polys)
-
-
-def _candidates(
-    pages: DataFrame, polys: list[Polygon], res: int, part_res: int = 2
-) -> DataFrame:
-    spark = pages.sparkSession
+    """Covering prefilter: the broadcast (poly_id, cov_cell, poly_edges)
+    covering equi-joined on the input's `cell` column (works for any
+    relation carrying one — pages, geocoded events). ``pip_inside`` is
+    the exact test on the output."""
     covering = polygon_covering(polys, res)
-    cov = spark.createDataFrame(covering, ["poly_id", "cov_cell"])
+    cov = _covering_relation(pages.sparkSession, polys, covering)
     pages = prune_to_cells(pages, {c for _, c in covering}, part_res)
     # broadcast: covering is tiny (|polys| x bbox cells) — the join prunes
     # pages to covered cells without a shuffle of the big side.
     return pages.join(F.broadcast(cov), pages["cell"] == cov["cov_cell"], "inner")
 
 
-def _pip_pandas_udf(polys: list[Polygon]):
-    """Vectorized ray-casting: for each row (poly_id, lat, lon) → bool.
-    Arrow-batched; numpy inner loop over the (few) polygon edges only."""
-    import numpy as np
+def pip_inside(lat: F.Column, lon: F.Column) -> F.Column:
+    """Exact point-in-polygon test of (lat, lon) against the polygon whose
+    ``poly_edges`` the row carries (every ``pip_candidates`` row does):
+    ray-casting crossing parity, counted by a JVM ``aggregate`` over the
+    edges, so it is stateless and runs in no Python worker. The per-edge
+    arithmetic is the exact formula of ``pip_join_sql`` and of the
+    ``sql_pip`` oracle, so the three agree bit-for-bit."""
 
-    edges = {}
-    for p in polys:
-        v = p.vertices
-        e = []
-        for j in range(len(v)):
-            y1, x1 = v[j]
-            y2, x2 = v[(j + 1) % len(v)]
-            if y1 != y2:  # horizontal edge can never satisfy the
-                e.append((y1, x1, y2, x2))  # crossing test; dropping it
-        edges[p.poly_id] = e  # avoids the 0-division in the slope
+    def crosses(e: F.Column) -> F.Column:
+        return ((e["y1"] > lat) != (e["y2"] > lat)) & (
+            lon < (e["x2"] - e["x1"]) * (lat - e["y1"]) / (e["y2"] - e["y1"]) + e["x1"]
+        )
 
-    # one dict-hash pass per batch maps poly_id strings to dense int
-    # codes; the per-polygon row masks then compare int64 (SIMD, one
-    # streamed 8B/row pass) instead of object-dtype strings (a Python-
-    # object compare per row PER polygon — measured as the scaling
-    # bottleneck of the Arrow lane at 32-core density: scattered
-    # PyObject reads are memory-latency-bound and got 64 passes/batch
-    # with a 64-fence registry)
-    id2code = {pid: k for k, pid in enumerate(edges)}
-    edge_lists = list(edges.values())
-
-    @F.pandas_udf(T.BooleanType())
-    def inside(poly_id: pd.Series, lat: pd.Series, lon: pd.Series) -> pd.Series:
-        res = pd.Series(False, index=lat.index)
-        py = lat.to_numpy()
-        px = lon.to_numpy()
-        codes = poly_id.map(id2code).to_numpy(dtype=np.int64)
-        out = np.zeros(len(py), dtype=bool)
-        for k, es in enumerate(edge_lists):
-            m = codes == k
-            if not m.any():
-                continue
-            yy, xx = py[m], px[m]
-            cnt = np.zeros(len(yy), dtype=np.int64)
-            for (y1, x1, y2, x2) in es:
-                crosses = (y1 > yy) != (y2 > yy)
-                with_x = xx < (x2 - x1) * (yy - y1) / (y2 - y1) + x1
-                cnt += (crosses & with_x).astype(np.int64)
-            out[m] = (cnt % 2) == 1
-        res[:] = out
-        return res
-
-    return inside
+    crossings = F.aggregate(
+        F.col("poly_edges"), F.lit(0), lambda n, e: n + crosses(e).cast("int")
+    )
+    return crossings % 2 == 1
 
 
 def pip_join(
@@ -319,26 +316,27 @@ def pip_join(
     keep: tuple[str, ...] = (),
 ) -> DataFrame:
     """(poly_id, url, lat, lon[, *keep]) for every page inside a polygon —
-    cell-prefilter + exact pandas-UDF test (the canonical path)."""
-    cand = _candidates(pages, polys, res)
-    inside = _pip_pandas_udf(polys)
-    return cand.where(
-        inside(F.col("poly_id"), F.col("lat"), F.col("lon"))
-    ).select("poly_id", "url", "lat", "lon", *keep)
+    cell-prefilter + exact ``pip_inside`` test (the canonical path)."""
+    cand = pip_candidates(pages, polys, res)
+    return cand.where(pip_inside(F.col("lat"), F.col("lon"))).select(
+        "poly_id", "url", "lat", "lon", *keep
+    )
 
 
 def pip_join_sql(pages: DataFrame, polys: list[Polygon], res: int) -> DataFrame:
-    """Same semantics, pure JVM: explode edges, crossing-parity agg.
+    """Same semantics as ``pip_join``, in the shape of the ``sql_pip``
+    oracle: join the edges, crossing-parity groupBy.
 
     Broadcast edge table (|polys| x sides rows); candidate x edge rows stay
     bounded because the cell prefilter ran first. Arithmetic is the exact
-    formula of the pandas UDF and of sql_pip_predicate (oracle).
+    formula of ``pip_inside`` and of ``sql_pip`` (oracle).
     """
-    spark = pages.sparkSession
-    edges = spark.createDataFrame(
-        _edge_rows(polys), ["e_poly", "y1", "x1", "y2", "x2"]
+    edges = local_relation(
+        pages.sparkSession,
+        _edge_rows(polys),
+        "e_poly string, y1 double, x1 double, y2 double, x2 double",
     )
-    cand = _candidates(pages, polys, res)
+    cand = pip_candidates(pages, polys, res)
     crossed = cand.join(
         F.broadcast(edges), cand["poly_id"] == edges["e_poly"], "inner"
     ).where(
@@ -425,8 +423,7 @@ def knn_geodesic(
     latitude. dist_km is rounded (GEO_ROUND) for cross-engine parity —
     the RANKING itself compares unrounded doubles, where a flip would
     need two candidates within ~1 ulp of each other."""
-    spark = pages.sparkSession
-    q = spark.createDataFrame(queries, ["query_id", "qlat", "qlon"])
+    q = local_relation(pages.sparkSession, queries, _QUERIES_DDL)
     d = haversine_km(
         F.col("qlat"), F.col("qlon"), F.col("lat"), F.col("lon")
     )
@@ -449,8 +446,7 @@ def knn_bruteforce(
     """Exact kNN: broadcast query points, score every page, window top-k.
     One full scan regardless of |queries| — the correctness baseline and
     the DuckDB oracle twin."""
-    spark = pages.sparkSession
-    q = spark.createDataFrame(queries, ["query_id", "qlat", "qlon"])
+    q = local_relation(pages.sparkSession, queries, _QUERIES_DDL)
     scored = pages.crossJoin(F.broadcast(q)).select(
         "query_id",
         "url",
@@ -493,7 +489,6 @@ def knn_ring(
     broadcast — the page side joins on `cell`, so at scale only candidate
     cells' partitions are scanned.
     """
-    spark = pages.sparkSession
     rows = []
     for qid, qla, qlo in queries:
         qcell = grid.py_cell_encode(qla, qlo, res)
@@ -507,8 +502,8 @@ def knn_ring(
             for dx in range(-rings, rings + 1):
                 c = res * grid.RES_MULT + r * grid.LAT_MULT + ((lo + dx) % nlon)
                 rows.append((qid, qla, qlo, c))
-    cand_cells = spark.createDataFrame(
-        rows, ["query_id", "qlat", "qlon", "cand_cell"]
+    cand_cells = local_relation(
+        pages.sparkSession, rows, f"{_QUERIES_DDL}, cand_cell bigint"
     )
     # static partition pruning when the table has the coarse layout column
     pages = prune_to_cells(pages, {r[3] for r in rows}, part_res=2)
@@ -588,8 +583,8 @@ def knn_adaptive(
             )
             break
         remaining, rings = retry, rings * 2
-    return pages.sparkSession.createDataFrame(
-        results, "query_id long, rank int, url string"
+    return local_relation(
+        pages.sparkSession, results, "query_id bigint, rank int, url string"
     )
 
 
@@ -808,20 +803,6 @@ def raster_vectorize(raster: DataFrame, res: int) -> DataFrame:
     )
 
 
-def _edge_rows(polys: list[Polygon]) -> list[tuple[str, float, float, float, float]]:
-    """(poly_id, y1, x1, y2, x2) per non-horizontal edge — the shared
-    input of every crossing-parity test (UDF, JVM, rasterize, oracle)."""
-    rows = []
-    for p in polys:
-        v = p.vertices
-        for j in range(len(v)):
-            y1, x1 = v[j]
-            y2, x2 = v[(j + 1) % len(v)]
-            if y1 != y2:  # horizontal edge never crosses
-                rows.append((p.poly_id, y1, x1, y2, x2))
-    return rows
-
-
 def rasterize_polygons(
     spark: SparkSession, polys: list[Polygon], res: int
 ) -> DataFrame:
@@ -833,36 +814,21 @@ def rasterize_polygons(
     features back to cells.
 
     Candidates are the conservative bbox covering (driver-side, tiny,
-    broadcast-sized); the exact center test is the same crossing-parity
-    arithmetic as pip_join/pip_join_sql, so all three agree bit-for-bit
-    with the SQL oracle. For country-sized polygons at fine res the
-    covering explodes server-side from the cell range instead — same
-    predicate, candidates generated with sequence()/explode."""
-    cov = spark.createDataFrame(polygon_covering(polys, res), ["poly_id", "cell"])
-    clat, clon = grid.cell_center(F.col("cell"), res)
+    broadcast-sized); the exact center test is ``pip_inside``, the test
+    of pip_join, so both agree bit-for-bit with the SQL oracle. The
+    covering and the test are folded on the driver's JVM when the plan is
+    optimised (a filter over a local relation), so no task runs."""
+    cov = _covering_relation(spark, polys, polygon_covering(polys, res))
+    clat, clon = grid.cell_center(F.col("cov_cell"), res)
     centers = cov.select(
-        "poly_id", "cell", clat.alias("clat"), clon.alias("clon")
+        "poly_id",
+        F.col("cov_cell").alias("cell"),
+        clat.alias("clat"),
+        clon.alias("clon"),
+        "poly_edges",
     )
-    edges = spark.createDataFrame(
-        _edge_rows(polys), ["e_poly", "y1", "x1", "y2", "x2"]
-    )
-    crossed = centers.join(
-        F.broadcast(edges), centers["poly_id"] == edges["e_poly"], "inner"
-    ).where(
-        ((F.col("y1") > F.col("clat")) != (F.col("y2") > F.col("clat")))
-        & (
-            F.col("clon")
-            < (F.col("x2") - F.col("x1"))
-            * (F.col("clat") - F.col("y1"))
-            / (F.col("y2") - F.col("y1"))
-            + F.col("x1")
-        )
-    )
-    return (
-        crossed.groupBy("poly_id", "cell", "clat", "clon")
-        .agg(F.count(F.lit(1)).alias("crossings"))
-        .where(F.col("crossings") % 2 == 1)
-        .select("poly_id", "cell", "clat", "clon")
+    return centers.where(pip_inside(F.col("clat"), F.col("clon"))).select(
+        "poly_id", "cell", "clat", "clon"
     )
 
 
@@ -911,14 +877,23 @@ def raster_per_lang(pages: DataFrame, res: int) -> DataFrame:
 
 
 def sql_polygon_edges_values(polys: list[Polygon]) -> str:
-    """VALUES list (poly_id, y1, x1, y2, x2) with full-precision literals."""
+    """VALUES list (poly_id, y1, x1, y2, x2) of DOUBLE columns holding the
+    vertices' exact doubles. DuckDB types a bare ``-38.5870...`` literal
+    as DECIMAL: its arithmetic is then exact decimal, and its cast back to
+    DOUBLE can miss the vertex by an ulp, so the oracle would disagree
+    with the engine's double arithmetic on points on an edge or at a
+    vertex's latitude. A string cast parses the shortest repr exactly."""
+
+    def d(x: float) -> str:
+        return f"'{x!r}'::DOUBLE"
+
     rows = []
     for p in polys:
         v = p.vertices
         for j in range(len(v)):
             y1, x1 = v[j]
             y2, x2 = v[(j + 1) % len(v)]
-            rows.append(f"('{p.poly_id}', {y1!r}, {x1!r}, {y2!r}, {x2!r})")
+            rows.append(f"('{p.poly_id}', {d(y1)}, {d(x1)}, {d(y2)}, {d(x2)})")
     return ",\n".join(rows)
 
 
@@ -1822,13 +1797,9 @@ def hotspots(
                 if 0 <= la + dla < (1 << res) and n in hotset:
                     union(c, n)
     labels = [(c, find(c)) for c in hot]
-    spark = pages.sparkSession
-    if not labels:
-        lab_df = spark.createDataFrame(
-            [], "cell bigint, hotspot_id bigint"
-        )
-    else:
-        lab_df = spark.createDataFrame(labels, ["cell", "hotspot_id"])
+    lab_df = local_relation(
+        pages.sparkSession, labels, "cell bigint, hotspot_id bigint"
+    )
     return raster.join(F.broadcast(lab_df), "cell", "inner").select(
         "cell", "n_pages", "hotspot_id"
     )
@@ -2320,10 +2291,10 @@ def zorder_bbox_query(
     # bbox_query.
     xy = grid.zorder_xy(F.col("lat"), F.col("lon"), level)
     z = grid.morton_key(xy["x"], xy["y"], level)
-    spark = pages.sparkSession
-    ranges_df = spark.createDataFrame(
+    ranges_df = local_relation(
+        pages.sparkSession,
         [(int(lo), int(hi)) for lo, hi in ranges],
-        schema="z_lo BIGINT, z_hi BIGINT",
+        "z_lo bigint, z_hi bigint",
     )
     zk = F.col("__zkey")
     return (
@@ -2699,9 +2670,10 @@ def ripley_pair_counts(
         .agg(F.count(F.lit(1)).cast("long").alias("n_band"))
     )
     # densify: every requested band appears even with zero pairs
-    spark = pages.sparkSession
-    bands = spark.createDataFrame(
-        [(i, float(r)) for i, r in enumerate(rs)], "band int, radius double"
+    bands = local_relation(
+        pages.sparkSession,
+        [(i, float(r)) for i, r in enumerate(rs)],
+        "band int, radius double",
     )
     n_points = pages.select(
         F.count(F.lit(1)).cast("long").alias("n_points")

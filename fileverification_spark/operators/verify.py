@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from fileverification_spark.functions import hashing
+from fileverification_spark.session import local_relation
 
 DEFAULT_ALGO = "sha256"
 
@@ -221,8 +222,8 @@ def verify_keys(
     the big table is scanned exactly once.
     """
     if not isinstance(keys, DataFrame):
-        keys = live.sparkSession.createDataFrame(
-            keys, "url string, provided_hash string"
+        keys = local_relation(
+            live.sparkSession, keys, "url string, provided_hash string"
         )
     computed = hashing.hash_fixed(F.col("text"), algo)
     matched = (

@@ -4,14 +4,20 @@ Local mode is the sandbox stand-in for a multi-executor cluster; the same
 conf names carry to spark-submit on a real cluster. AQE is on so skewed
 shuffles re-plan at runtime (north_rule: skew handled explicitly — salting
 in operators/verify.py and operators/spatial.py is the first line, AQE the
-backstop).
+backstop). ``local_relation`` is how operators put driver-built rows
+(polygon coverings, query points, probe lists) into a plan.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable, Sequence
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+
+#: heap ceiling of the driver JVM when the host has RAM to spare
+MAX_DRIVER_MEM_MB = 16 * 1024
 
 
 def get_spark(
@@ -25,6 +31,8 @@ def get_spark(
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, fallback 32).
     ``shuffle_partitions`` defaults to 2x the local cores — enough to keep
     every thread busy through AQE coalescing without tiny-partition overhead.
+    ``spark.driver.memory`` is ``$SPARK_DRIVER_MEM`` when set, else
+    ``default_driver_memory()``.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if master is None:
@@ -47,7 +55,10 @@ def get_spark(
         # 128 MiB input splits: at 100 TB that is ~800k tasks — fine for a
         # 1000-executor cluster; local runs never see files that big.
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
     )
     # shuffle/spill on tmpfs when available: local[N] funnels every
@@ -60,6 +71,48 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Driver heap that fits the host: half of its RAM, at most 16g.
+
+    In local mode the driver JVM is the whole engine, and its RSS runs
+    well past the heap (off-heap buffers, metaspace, JIT), so a heap the
+    size of the host's RAM gets the process OOM-killed instead of failing
+    with a Java ``OutOfMemoryError``. Hosts without ``meminfo`` keep 16g."""
+    try:
+        with open(meminfo) as f:
+            kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration):
+        return f"{MAX_DRIVER_MEM_MB}m"
+    return f"{min(MAX_DRIVER_MEM_MB, kb // 1024 // 2)}m"
+
+
+def local_relation(
+    spark: SparkSession, rows: Iterable[Sequence], schema: str
+) -> DataFrame:
+    """Relation of driver-side ``rows`` (tuples in ``schema`` order) typed
+    by the DDL ``schema``, e.g. ``"poly_id string, cell bigint"``.
+
+    The rows travel as a ``pyarrow.Table``, which Spark plans as a JVM
+    ``LocalTableScan``: the data is part of the plan, and executing it
+    starts no Python worker. ``createDataFrame(<list>)`` instead plans a
+    PythonRDD-backed ``Scan ExistingRDD`` that runs a Python-worker pass
+    on every execution of every plan that reads it."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = T.DataType.fromDDL(schema)
+    arrow = to_arrow_schema(struct)
+    rows = [tuple(r) for r in rows]
+    bad = next((r for r in rows if len(r) != len(arrow)), None)
+    if bad is not None:
+        raise ValueError(f"row {bad!r} does not have the {len(arrow)} fields of {schema!r}")
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema=struct)
 
 
 def _parse_local_cores(master: str) -> int | None:

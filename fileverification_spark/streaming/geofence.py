@@ -10,17 +10,18 @@ notification pipeline (FV/Notifications.cs:96-110: batch changes, then
 alert); here the "change" is a geofence entry.
 
 Streaming-safety is the design constraint: the exact PIP test is the
-*stateless* vectorized pandas-UDF ray cast (no per-event groupBy, unlike
-the crossing-parity JVM variant which needs an aggregation per candidate
-pair), so `geofence_hits` is a pure map/filter over the stream — it
-chains onto any source and leaves the single stateful operator to be the
-windowed count. Batch and stream run the identical code path; the batch
-form is the DuckDB oracle and tests pin availableNow == batch.
+*stateless* `pip_inside` Column, a crossing-parity fold over the edges
+each covering row carries (no per-event groupBy, unlike `pip_join_sql`,
+which needs an aggregation per candidate pair), so `geofence_hits` is a
+pure map/filter over the stream — it chains onto any source and leaves
+the single stateful operator to be the windowed count. Batch and stream
+run the identical code path; the batch form is the DuckDB oracle and
+tests pin availableNow == batch.
 
 At 100 TB/day of events: the fence set is broadcast (small), the covering
-prefilter drops events outside candidate cells before the Python-side
-exact test, and the alert aggregation shuffles only (window, poly_id) —
-state is bounded by |fences| x |open windows|.
+prefilter drops events outside candidate cells before the exact test, and
+the alert aggregation shuffles only (window, poly_id) — state is bounded
+by |fences| x |open windows|.
 """
 
 from __future__ import annotations
@@ -51,7 +52,7 @@ def geofence_hits(
     events: DataFrame, polys: list[S.Polygon], res: int = 4
 ) -> DataFrame:
     """(event_id, ts, user_id, poly_id, lat, lon) for every event inside a
-    fence. Stateless: broadcast covering equi-join + pandas-UDF exact
+    fence. Stateless: broadcast covering equi-join + ``pip_inside`` exact
     test — safe to apply to a stream before any watermark/aggregation.
     Both stages are the public spatial primitives, so covering/prune
     behavior stays identical to the batch PIP path by construction."""
@@ -59,10 +60,9 @@ def geofence_hits(
         "cell", grid.cell_encode(F.col("lat"), F.col("lon"), res)
     )
     cand = S.pip_candidates(geo, polys, res)
-    inside = S.pip_inside_udf(polys)
-    return cand.where(
-        inside(F.col("poly_id"), F.col("lat"), F.col("lon"))
-    ).select("event_id", "ts", "user_id", "poly_id", "lat", "lon")
+    return cand.where(S.pip_inside(F.col("lat"), F.col("lon"))).select(
+        "event_id", "ts", "user_id", "poly_id", "lat", "lon"
+    )
 
 
 def geofence_alerts(hits: DataFrame, streaming: bool = False) -> DataFrame:

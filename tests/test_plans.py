@@ -37,8 +37,29 @@ def test_exclusion_filter_pushes_down(spark):
 
 
 def test_pip_join_broadcasts(spark, pages_small):
-    pip = S.pip_join_sql(pages_small, S.default_polygons(), res=P.LEAF_RES)
-    assert X.uses_broadcast_join(pip)
+    polys = S.default_polygons()
+    assert X.uses_broadcast_join(S.pip_join(pages_small, polys, res=P.LEAF_RES))
+    assert X.uses_broadcast_join(S.pip_join_sql(pages_small, polys, res=P.LEAF_RES))
+
+
+def test_spatial_queries_run_in_the_jvm(spark, pages_small):
+    """The executed plans of pip_join, knn_ring and geofence_hits hold no
+    Python evaluation node and no PythonRDD scan: their driver-built
+    inputs (polygon covering, ring-disk cells) are LocalTableScans."""
+    from fileverification_spark.streaming import geofence as SG
+    from fileverification_spark.streaming import windows as SW
+
+    queries = {
+        "pip_join": S.pip_join(pages_small, S.default_polygons(), res=P.LEAF_RES),
+        "knn_ring": S.knn_ring(pages_small, S.default_query_points(4), 5, res=3, rings=4),
+        "geofence_hits": SG.geofence_hits(SW.read_events(spark, SF), S.default_polygons()),
+    }
+    for name, df in queries.items():
+        assert df.collect(), name
+        plan = df._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
+        for node in ("ArrowEvalPython", "BatchEvalPython", "Scan ExistingRDD"):
+            assert node not in plan, (name, node)
+        assert "LocalTableScan" in plan, name
 
 
 def test_knn_bruteforce_broadcasts(spark, pages_small):

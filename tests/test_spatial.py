@@ -11,7 +11,7 @@ def _as_set(df, cols):
     return {tuple(r[c] for c in cols) for r in df.collect()}
 
 
-def test_pip_pandas_equals_sql_path(spark, pages_small):
+def test_pip_join_equals_sql_path(spark, pages_small):
     polys = S.default_polygons()
     a = _as_set(S.pip_join(pages_small, polys, res=4), ["poly_id", "url"])
     b = _as_set(S.pip_join_sql(pages_small, polys, res=4), ["poly_id", "url"])
@@ -24,18 +24,76 @@ def test_pip_prefilter_is_conservative(spark, pages_small):
     polys = S.default_polygons()
     import pyspark.sql.functions as F
 
-    inside = S._pip_pandas_udf(polys)
-    cov = spark.createDataFrame(
-        [(p.poly_id,) for p in polys], ["poly_id"]
-    )
+    # one row per polygon, carrying its edges: every page is a candidate
+    every = S._covering_relation(spark, polys, [(p.poly_id, 0) for p in polys])
     full = (
-        pages_small.crossJoin(F.broadcast(cov))
-        .where(inside(F.col("poly_id"), F.col("lat"), F.col("lon")))
+        pages_small.crossJoin(F.broadcast(every))
+        .where(S.pip_inside(F.col("lat"), F.col("lon")))
         .select("poly_id", "url")
     )
     a = _as_set(full, ["poly_id", "url"])
     b = _as_set(S.pip_join(pages_small, polys, res=4), ["poly_id", "url"])
     assert a == b
+
+
+def _boundary_points(polys):
+    """(url, lat, lon) points the crossing test is most likely to get
+    wrong: every vertex, points at each vertex's latitude, points on each
+    edge (computed with the test's own arithmetic) and a hair to either
+    side, midpoints of horizontal edges, and a grid over each bbox, whose
+    points are inside the bbox but often outside the polygon."""
+    pts = []
+    for p in polys:
+        la0, la1, lo0, lo1 = p.bbox
+        v = p.vertices
+        for j, (y1, x1) in enumerate(v):
+            y2, x2 = v[(j + 1) % len(v)]
+            pts += [(y1, x1), (y1, x1 - 0.5), (y1, x1 + 0.5), (y1, (lo0 + lo1) / 2)]
+            if y1 == y2:
+                pts.append((y1, (x1 + x2) / 2))
+                continue
+            for t in (0.25, 0.5, 0.75):
+                lat = y1 + t * (y2 - y1)
+                lon = (x2 - x1) * (lat - y1) / (y2 - y1) + x1
+                pts += [(lat, lon), (lat, lon - 1e-9), (lat, lon + 1e-9)]
+        for i in range(9):
+            for k in range(9):
+                pts.append((la0 + (la1 - la0) * i / 8, lo0 + (lo1 - lo0) * k / 8))
+    return [(f"pt{n}", float(la), float(lo)) for n, (la, lo) in enumerate(pts)]
+
+
+def test_pip_inside_boundary_matches_duckdb(spark):
+    """The exact test agrees with the sql_pip oracle, run through DuckDB,
+    on points placed on vertices, edges and vertex latitudes, including
+    polygons with horizontal edges and a concave notch."""
+    import duckdb
+    import pandas as pd
+    import pyspark.sql.functions as F
+
+    from fileverification_spark.session import local_relation
+
+    polys = S.default_polygons() + [
+        S.Polygon("rect", [(10.0, 10.0), (10.0, 20.0), (20.0, 20.0), (20.0, 10.0)]),
+        S.Polygon("notch", [(30.0, 30.0), (40.0, 35.0), (30.0, 40.0), (50.0, 35.0)]),
+        S.Polygon("step", [(-5.0, 0.0), (-5.0, 6.0), (0.0, 6.0), (0.0, 3.0),
+                           (5.0, 3.0), (5.0, 0.0)]),
+    ]
+    res = 4
+    pts = _boundary_points(polys)
+    pages = local_relation(spark, pts, "url string, lat double, lon double")
+    pages = pages.withColumn("cell", grid.cell_encode(F.col("lat"), F.col("lon"), res))
+    got = _as_set(S.pip_join(pages, polys, res=res), ["poly_id", "url"])
+
+    con = duckdb.connect()
+    try:
+        con.register("pages", pd.DataFrame(pts, columns=["url", "lat", "lon"]))
+        want = {(r[0], r[1]) for r in con.execute(S.sql_pip(polys)).fetchall()}
+    finally:
+        con.close()
+    assert got == want
+    # non-vacuous: hits in every polygon, and candidates the test rejects
+    assert {pid for pid, _ in got} == {p.poly_id for p in polys}
+    assert S.pip_candidates(pages, polys, res).count() > len(got)
 
 
 def test_knn_ring_matches_bruteforce(spark, pages_small):
@@ -145,9 +203,9 @@ def test_knn_adaptive_exact(spark, pages_small):
     assert got == exact
 
 
-def test_rasterize_agrees_with_pip_udf(spark):
-    # vector->raster mask centers must be exactly the points the pandas-
-    # UDF ray caster accepts: feed each candidate cell center through
+def test_rasterize_agrees_with_pip_join(spark):
+    # vector->raster mask centers must be exactly the points pip_join's
+    # exact test accepts: feed each candidate cell center through
     # pip_join (as synthetic pages) and compare the surviving sets
     from pyspark.sql import functions as F
 

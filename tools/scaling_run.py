@@ -122,7 +122,7 @@ def job():
             V.verify_counts(V.verify_tree(live, stored)).collect()}
 """,
     # the spatial-join half of the headline metric: broadcast prepared
-    # polygon coverings + exact pandas-UDF PIP test over every page
+    # polygon coverings + exact crossing-parity Column over every page
     "pip": r"""
 def job():
     hits = S.pip_join(live, S.default_polygons(), P.LEAF_RES)
@@ -144,10 +144,9 @@ def job():
     hits = S.pip_join(live, FENCES, P.LEAF_RES)
     return {"total_hits": hits.count()}
 """,
-    # the pure-JVM twin of pip64 (identical semantics/counts): explode
-    # edges + crossing-parity agg inside whole-stage codegen — no Arrow
-    # transfer, no Python workers. Separates "the operator doesn't
-    # scale" from "the Arrow/Python lane saturates at high core density"
+    # the groupBy twin of pip64 (identical semantics/counts): join the
+    # edges + crossing-parity agg inside whole-stage codegen, against
+    # pip64's per-row fold over the edges each covering row carries
     "pip64_sql": r"""
 FENCES = [S.Polygon(f"{p.poly_id}_{j}",
                     [(la + 0.5 * j, lo + 0.7 * j) for la, lo in p.vertices])
@@ -301,18 +300,18 @@ JOB_DESCS = {
     ),
     "pip": (
         "Spatial point-in-polygon join (parquet scan -> geocode+cell derive "
-        "->\nbroadcast polygon covering prefilter -> exact pandas-UDF ray "
+        "->\nbroadcast polygon covering prefilter -> exact JVM ray "
         "cast ->\nper-polygon counts)"
     ),
     "pip64": (
         "Spatial point-in-polygon join against a 64-fence registry "
         "(parquet scan\n-> geocode+cell derive -> broadcast covering "
-        "prefilter -> exact\npandas-UDF ray cast -> hit count)"
+        "prefilter -> exact\nJVM ray cast -> hit count)"
     ),
     "pip64_sql": (
-        "Pure-JVM twin of pip64 (identical hit counts): 64-fence PIP via "
+        "GroupBy twin of pip64 (identical hit counts): 64-fence PIP via "
         "broadcast\nedge table + crossing-parity aggregate in whole-stage "
-        "codegen — no Arrow,\nno Python workers"
+        "codegen"
     ),
     "headline": (
         "HEADLINE metric shape (BASELINE.json): spatial join + per-cell "
